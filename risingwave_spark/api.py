@@ -23,7 +23,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from risingwave_spark.streaming.mv import ChunkedState, MaterializedView, OP_COL, with_ops
+from risingwave_spark.streaming.mv import (
+    ChunkedState,
+    MaterializedView,
+    split_changelog,
+    with_ops,
+)
 
 
 def sub_now(sql: str, ts) -> str:
@@ -1783,8 +1788,7 @@ class Engine:
     def _apply_dml_locked(self, table: str, batch: DataFrame) -> None:
         t = self.tables[table]
         t.state.fold(
-            batch.where(f"`{OP_COL}` > 0").drop(OP_COL),
-            batch.where(f"`{OP_COL}` < 0").drop(OP_COL),
+            *split_changelog(batch),
             commit_ts=self._now_epoch(),
         )
         t._register()

@@ -5332,14 +5332,17 @@ def _handle_create_topn_mv(
     over-window rank filter into StreamGroupTopN, `top_n/group_top_n.rs`;
     e2e_test/streaming/group_top_n/): `SELECT ... FROM (SELECT ...,
     row_number()/rank()/dense_rank() OVER (PARTITION BY p ORDER BY o)
-    AS rn FROM t) WHERE rn <= k`. Compiles onto MaterializedOverWindow:
-    each batch re-ranks exactly the touched partitions from full state,
-    so deleting a current top row surfaces the next-best (the
+    AS rn FROM t) WHERE rn <= k`. Compiles onto the generic retractable
+    MaterializedView with a ranking recompute: each batch re-ranks
+    exactly the touched partitions from full state, so deleting a
+    current top row surfaces the next-best (the
     non-append-only TopN's reason for keeping all rows). rank/
     dense_rank give WITH TIES semantics. The base pk rides as a final
     tie-break so output is deterministic under non-unique ORDER BY."""
+    from pyspark.sql import Window as W
+
     from risingwave_spark.api import MaterializedViewHandle
-    from risingwave_spark.streaming.mv import MaterializedOverWindow, with_ops as _wo
+    from risingwave_spark.streaming.mv import MaterializedView, with_ops as _wo
 
     tbl = tn.group("tbl")
     if tbl not in engine.tables:
@@ -5400,26 +5403,19 @@ def _handle_create_topn_mv(
     fn = {"ROW_NUMBER": F.row_number, "RANK": F.rank, "DENSE_RANK": F.dense_rank}[
         tn.group("fn").upper()
     ]
+    cols = [F.desc(c) if d else F.asc(c) for c, d in order]
+    if tn.group("fn").upper() == "ROW_NUMBER":
+        # deterministic pick among order-ties; rank/dense_rank keep
+        # WITH-TIES semantics, so the user's order stands alone
+        cols += [F.asc(c) for c in pks if c not in [o for o, _ in order]]
+    rank = fn().over(W.partitionBy(*pb).orderBy(*cols)).alias(rn)
 
-    def project(rows: DataFrame, _w) -> DataFrame:
-        from pyspark.sql import Window as W
-
-        cols = [F.desc(c) if d else F.asc(c) for c, d in order]
-        if tn.group("fn").upper() == "ROW_NUMBER":
-            # deterministic pick among order-ties; rank/dense_rank keep
-            # WITH-TIES semantics, so the user's order stands alone
-            cols += [F.asc(c) for c in pks if c not in [o for o, _ in order]]
-        w = W.partitionBy(*pb).orderBy(*cols)
-        ranked = rows.select(*inner_cols, fn().over(w).alias(rn))
+    def recompute(rows: DataFrame) -> DataFrame:
+        ranked = rows.select(*inner_cols, rank)
         return ranked.filter(F.col(rn) <= k).select(*out_cols)
 
-    mv = MaterializedOverWindow(
-        engine.spark,
-        os.path.join(engine.warehouse, f"mv_{name}"),
-        pb,
-        [],
-        t.pk,
-        project,
+    mv = MaterializedView(
+        engine.spark, os.path.join(engine.warehouse, f"mv_{name}"), pb, t.pk, recompute
     )
     if not mv.mv.exists():
         mv.apply_batch(_wo(t.snapshot(), 1))
@@ -5446,7 +5442,7 @@ def _mv_stream_pipeline(engine: "Engine", stmt: str) -> list[str]:
     masked, _lits = _mask_strings(select)
     out = [f"StreamMaterialize {{ mv: {name} }}"]
     if em:
-        kind = "EowcOverWindow" if re.search(r"\bOVER\s*\(", masked, re.I) else "EowcTumbleAgg"
+        kind = "EowcOverWindow" if re.search(r"\bOVER\s*\(", masked, re.I) else "EowcAggMv"
         return out + [
             f"└─ {kind} {{ emit: on window close, late rows dropped }}",
             "   └─ WatermarkFilter { durable watermark }",
@@ -5461,7 +5457,7 @@ def _mv_stream_pipeline(engine: "Engine", stmt: str) -> list[str]:
         ]
     if _TOPN_MV.match(masked):
         return out + [
-            "└─ AppendOnlyGroupTopN / GroupTopN { rank filter, retractable }",
+            "└─ MaterializedView { rank filter, retractable partition recompute }",
             "   └─ StreamTableScan",
         ]
     if re.search(r"\bOVER\s*\(", masked, re.I):
@@ -8684,7 +8680,7 @@ def _finish_create_broker_sink(
         # the MV. The reference rejects this at CREATE unless the user
         # opts in (SinkFormatDesc validation: "Consider making it append
         # only or use force_append_only='true'") — ADVICE r8.
-        append_only_views = ("EowcAggMv", "EowcTumbleAgg", "AppendOnlyGroupTopN")
+        append_only_views = ("EowcAggMv", "AppendOnlyGroupTopN")
         forced = str(opts.get("force_append_only", "")).lower() == "true"
         if type(h.view).__name__ not in append_only_views and not forced:
             raise ValueError(

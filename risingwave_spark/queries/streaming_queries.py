@@ -317,15 +317,26 @@ def stream_eowc_tumble(spark, sf_dir):
     closed by the final watermark (max ts − 10 min), emitted once each."""
     import datetime
 
-    from risingwave_spark.streaming.mv import EowcTumbleAgg
+    from risingwave_spark.streaming.mv import EowcAggMv
 
     ev = tables(spark, sf_dir)["events"]
     # events min/max ts from the parquet footer statistics — value-
     # identical to the agg, zero Spark jobs (util.footer_bounds)
     lo, hi = footer_bounds(spark, sf_dir)
     span = (hi - lo) / 4
-    eowc = EowcTumbleAgg(
-        spark, tempfile.mkdtemp(prefix="rw_eowc_"), "ts", "1 hour", delay_seconds=600
+    n = F.count(F.lit(1)).alias("n")
+
+    def count_per_window(rows):
+        return rows.groupBy(F.col("window_start").alias("ws")).agg(n)
+
+    eowc = EowcAggMv(
+        spark,
+        tempfile.mkdtemp(prefix="rw_eowc_"),
+        "ts",
+        "1 hour",
+        600,
+        count_per_window,
+        empty_input=lambda: ev.limit(0),
     )
     for i in range(4):
         a = lo + i * span
@@ -355,30 +366,25 @@ def stream_over_window(spark, sf_dir):
     DELETES every 7th event; the final MV equals the batch window over
     the survivors. The frame-delta variant for ordered arrival is
     `stream_over_window_delta`."""
-    from risingwave_spark.streaming.mv import MaterializedOverWindow
+    from pyspark.sql import Window as W
+
+    from risingwave_spark.streaming.mv import MaterializedView
 
     ev = tables(spark, sf_dir)["events"]
-
-    # window Columns built once per WindowSpec, not per fold (r13 §B:
-    # Column construction is py4j round trips; the spec is cached by
-    # MaterializedOverWindow._recompute so this memo hits every fold)
-    cols_by_spec: dict = {}
-
-    def project(rows, w):
-        if id(w) not in cols_by_spec:
-            cols_by_spec[id(w)] = [
-                F.row_number().over(w).alias("rn"),
-                F.lag("value").over(w).alias("prev_value"),
-            ]
-        return rows.select("user_id", "event_id", "value", *cols_by_spec[id(w)])
-
-    mvw = MaterializedOverWindow(
+    # window Columns built once, not per fold (r13 §B: Column
+    # construction is py4j round trips)
+    w = W.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
+    cols = [
+        "user_id", "event_id", "value",
+        F.row_number().over(w).alias("rn"),
+        F.lag("value").over(w).alias("prev_value"),
+    ]
+    mvw = MaterializedView(
         spark,
         tempfile.mkdtemp(prefix="rw_ow_"),
         ["user_id"],
-        ["ts", "event_id"],
         "event_id",
-        project,
+        lambda rows: rows.select(*cols),
     )
     for i in range(4):
         mvw.apply_batch(with_ops(ev.filter(F.col("event_id") % 4 == i), 1))
@@ -455,28 +461,17 @@ def stream_group_topn_retract(spark, sf_dir):
     non-append-only TopN keeps all rows, not just k)."""
     from pyspark.sql import Window as W
 
-    from risingwave_spark.streaming.mv import MaterializedOverWindow
+    from risingwave_spark.streaming.mv import MaterializedView
 
     ev = tables(spark, sf_dir)["events"]
+    w = W.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
+    rk = F.row_number().over(w).alias("rk")
 
-    def project(rows, _w):
-        # rank is value-DESC — build the spec here (the `_w` default is
-        # ascending order_cols; project may use any spec over `keys`)
-        w = W.partitionBy("event_type").orderBy(F.desc("value"), F.asc("event_id"))
-        return (
-            rows.select(
-                "event_type", "event_id", "value", F.row_number().over(w).alias("rk")
-            )
-            .filter(F.col("rk") <= 3)
-        )
+    def top3(rows):
+        return rows.select("event_type", "event_id", "value", rk).filter("rk <= 3")
 
-    mvw = MaterializedOverWindow(
-        spark,
-        tempfile.mkdtemp(prefix="rw_tn_"),
-        ["event_type"],
-        [],
-        "event_id",
-        project,
+    mvw = MaterializedView(
+        spark, tempfile.mkdtemp(prefix="rw_tn_"), ["event_type"], "event_id", top3
     )
     for i in range(2):
         mvw.apply_batch(with_ops(ev.filter(F.col("event_id") % 2 == i), 1))

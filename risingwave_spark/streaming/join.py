@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 
 from risingwave_spark.streaming.mv import (
     ChunkedState,
-    OP_COL,
     _BucketedMvTable,
     buckets_from_chunks,
     buckets_of_values,
@@ -42,6 +41,7 @@ from risingwave_spark.streaming.mv import (
     key_values_filter,
     non_strict_analysis,
     nullsafe_cond,
+    split_changelog,
     with_ops,
 )
 
@@ -116,11 +116,8 @@ class RetractableStreamJoin:
     ):
         if batch is None:
             return None, False
-        # parsed-SQL one-call forms (r13 §B: Column chains pay a py4j
-        # round trip per node; where(str)+drop(str) is 2 per side)
         did = state.fold(
-            batch.where(f"`{OP_COL}` > 0").drop(OP_COL),
-            batch.where(f"`{OP_COL}` < 0").drop(OP_COL),
+            *split_changelog(batch),
             batch_id=batch_id,
             tomb_extra_cols=keys,
             batch_ns=batch_ns,

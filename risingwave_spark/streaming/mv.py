@@ -128,9 +128,11 @@ def _keyset_cap(env: str, default: int) -> int:
     """Literal key-set caps, env-overridable (SPARK_GRAFT_KEYSET_MAX_ROWS
     / SPARK_GRAFT_KEYSET_MAX_DISTINCT): the caps decide when a fold takes
     the driver-side literal path vs the broadcast-join path, so a cluster
-    deployment can tune them to its driver budget — and setting either to
-    0 forces the join path everywhere, which is how the scale path is
-    exercised at bench scale (plans/r13 fallback capture + test)."""
+    deployment can tune them to its driver budget. Setting either to 0
+    sends every NON-EMPTY fold to the join path, which is how the scale
+    path is exercised at bench scale (plans/r13 fallback capture + test);
+    an empty fold has no keys to exceed a cap and still takes the literal
+    path (an empty key set)."""
     try:
         return int(os.environ[env])
     except (KeyError, ValueError):
@@ -294,6 +296,16 @@ def bump_chunk_base(changelog_dir: str, delta: int) -> None:
 def with_ops(df: DataFrame, op: int = 1) -> DataFrame:
     """Tag a DataFrame as a changelog chunk (op=+1 insert, -1 delete)."""
     return df.withColumn(OP_COL, F.lit(op))
+
+
+def split_changelog(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(inserts, deletes) of a changelog chunk, `__op` dropped. Parsed-SQL
+    one-call forms (r13 §B: Column chains pay a py4j round trip per node;
+    where(str)+drop(str) is 2 per side)."""
+    return (
+        batch.where(f"`{OP_COL}` > 0").drop(OP_COL),
+        batch.where(f"`{OP_COL}` < 0").drop(OP_COL),
+    )
 
 
 def key_bucket_expr(keys: list[str], n_buckets: int):
@@ -1254,10 +1266,7 @@ class _RetractableView:
         state commit and the MV version flip. `batch_ns` scopes the
         redelivery pointer per upstream stream (see ChunkedState.fold).
         """
-        # parsed-SQL one-call forms (r13 §B: Column chains pay a py4j
-        # round trip per node; where(str)+drop(str) is 2 per side)
-        inserts = batch.where(f"`{OP_COL}` > 0").drop(OP_COL)
-        deletes = batch.where(f"`{OP_COL}` < 0").drop(OP_COL)
+        inserts, deletes = split_changelog(batch)
         did_fold = self.state.fold(
             inserts,
             deletes,
@@ -1482,46 +1491,6 @@ class MaterializedGroupAgg(_RetractableView):
         return rows.groupBy(*self.keys).agg(*self._agg_cols)
 
 
-class MaterializedOverWindow(_RetractableView):
-    """Incrementally-maintained window-function MV with retraction
-    (reference OverWindow general executor, `over_window/general.rs:48` +
-    `over_partition.rs`): on every batch, the window functions are
-    recomputed for exactly the PARTITIONS the batch touched (the
-    reference's delta-based affected-range recompute, here at partition
-    granularity) and spliced into the MV.
-
-    `project(rows, w)` receives the affected partitions' rows and the
-    partition-ordered WindowSpec and returns the output rows (must
-    include the partition keys).
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_dir: str,
-        keys: list[str],
-        order_cols: list[str],
-        row_id: str,
-        project,
-    ):
-        super().__init__(spark, state_dir, keys, row_id)
-        self.order_cols = order_cols
-        self.project = project
-        self._wspec = None
-
-    def _recompute(self, rows: DataFrame) -> DataFrame:
-        from pyspark.sql import Window as W
-
-        # WindowSpec cached (r13 §B): constant over fixed key/order
-        # names, and callers may key their own Column caches on its
-        # identity (see stream_over_window's project)
-        if self._wspec is None:
-            self._wspec = W.partitionBy(*self.keys).orderBy(
-                *[F.asc(c) for c in self.order_cols]
-            )
-        return self.project(rows, self._wspec)
-
-
 def run_changelog(
     spark: SparkSession,
     state_dir: str,
@@ -1670,202 +1639,222 @@ def _parquet_ts_minmax(path: str, col: str):
     return mn, mx
 
 
-class EowcTumbleAgg:
-    """Emit-on-window-close tumbling-window aggregate (reference EOWC:
-    `sort.rs:20` buffer + `over_window/eowc.rs:88`, EMIT ON WINDOW CLOSE
-    MVs): rows buffer until the watermark (max event time − delay) passes
-    the window end, then the window's aggregate is emitted exactly once
-    (append-only output). Rows arriving for an already-closed window are
-    LATE and dropped — the reference's WatermarkFilter policy
+class EowcBuffer:
+    """Emit-on-window-close state shared by every append-only watermark
+    operator (`EowcAggMv`, `EowcOverWindow`): the reference's sort
+    buffer (`sort.rs:20`) plus its durable watermark and WatermarkFilter
     (`watermark_filter.rs:34-36`).
 
-    Buffer layout (round-12 optimization, guide §1.2/§2.4 — fewer jobs
-    and no O(buffer) rewrite per batch): batches append as immutable
-    chunk files; the watermark and the did-any-window-close decision come
-    from the chunks' FOOTER min/max timestamp statistics (driver-side,
-    zero Spark jobs — previously one agg job over buffer∪batch per
-    batch). Emission scans only the chunks whose ts range overlaps the
-    newly-closed window span (E, wm] — file-level pruning — and fully
-    emitted chunks are garbage-collected instead of rewriting the
-    surviving buffer every batch (previously one O(buffer) write per
-    batch). Per-batch cost: ONE O(batch) chunk write, plus one pruned
-    aggregation job only when windows actually close. State stays
-    bounded by delay × arrival rate, same as before, via chunk GC.
+    Rows wait until the watermark (max event time seen − delay,
+    monotonic) passes the point where they close — the end of their
+    tumble window (`window_sec`) or their own ts (`window_sec=None`) —
+    and leave exactly once. Rows at/behind the watermark are late and
+    dropped at the door: everything up to it has already closed.
+
+    Layout (guide §1.2/§2.4 — few jobs, no O(buffer) rewrite): every
+    batch appends one immutable chunk dir; the watermark and the
+    did-anything-close decision come from the chunks' parquet footer
+    min/max ts (driver-side, zero Spark jobs); an emission reads only
+    the chunks whose ts range overlaps the newly-closed span (prev wm,
+    wm]; fully-closed chunks are GC'd. State stays bounded by delay ×
+    arrival rate. Emissions append as `out/e{N}` dirs. Restart needs no
+    extra metadata: the durable WM file IS the emit horizon and chunk
+    ranges rebuild from the footers.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_dir: str,
-        ts_col: str,
-        window_duration: str,
-        delay_seconds: int,
-    ):
-        self.spark = spark
-        self.ts_col = ts_col
-        self.window_duration = window_duration
-        self._win_sec = _parse_duration_seconds(window_duration)
-        self.delay_seconds = delay_seconds
-        self.chunks_dir = os.path.join(state_dir, "buffer")
-        # EOWC output is append-only by construction (each window emitted
-        # exactly once) → one new emission dir per close, never rewritten
-        self.out_path = os.path.join(state_dir, "out")
-        self._emitted_any = os.path.isdir(self.out_path) and any(
-            os.scandir(self.out_path)
-        )
-        self._watermark = None  # monotonic
-        #: highest window end already emitted (windows ending at/before
-        #: this are closed-and-emitted; late rows for them are dropped)
-        self._emit_horizon = None
-        # restart over an existing state dir: adopt surviving chunks
-        # (ts ranges from footers — no Spark job) and resume numbering
-        self._chunk_stats: dict[str, tuple] = {}  # path -> (min_ts, max_ts)
-        self._n = 0
-        if os.path.isdir(self.chunks_dir):
-            for d in sorted(os.listdir(self.chunks_dir)):
-                m = re.fullmatch(r"b(\d+)", d)
-                if not m:
-                    continue
-                p = os.path.join(self.chunks_dir, d)
-                mn, mx = _parquet_ts_minmax(p, ts_col)
-                self._n = max(self._n, int(m.group(1)) + 1)
-                if mx is None:
-                    shutil.rmtree(p, ignore_errors=True)
-                    continue
-                self._chunk_stats[p] = (mn, mx)
-        self._emit_n = _next_seq_index(self.out_path, "e")
-        # explicit schemas for the chunk/output re-reads: parquet schema
-        # inference is a (small) Spark job per read — the schemas are
-        # already known driver-side, so skip those jobs entirely
-        self._in_schema = None
-        self._out_schema = None
-
-    def _window_end(self, ts):
-        """End of the tumble window containing `ts` (Spark window()
-        alignment: origin 1970-01-01 UTC)."""
+    def __init__(self, spark, state_dir, chunks_dir, ts_col, delay_seconds, window_sec=None):
         import datetime
 
+        self.spark = spark
+        self.ts_col = ts_col
+        self.delay_seconds = delay_seconds
+        self.window_sec = window_sec
+        self.chunks_dir = chunks_dir
+        #: input schema, known driver-side from the first batch: chunk
+        #: re-reads skip the parquet schema-inference job
+        self.schema = None
+        self.wm_path = os.path.join(state_dir, "WM")
+        self.watermark = None
+        try:
+            with open(self.wm_path) as f:
+                self.watermark = datetime.datetime.fromisoformat(f.read().strip())
+        except (FileNotFoundError, ValueError):
+            pass
+        # restart: adopt surviving chunks (ts ranges from footers — no
+        # Spark job) and resume numbering past every existing index
+        self.stats: dict[str, tuple] = {}  # chunk path -> (min_ts, max_ts)
+        self.n = _next_seq_index(chunks_dir, "b")
+        for c in sorted(os.listdir(chunks_dir)) if os.path.isdir(chunks_dir) else ():
+            if re.fullmatch(r"b\d+", c):
+                self._adopt(os.path.join(chunks_dir, c))
+        self.out_path = os.path.join(state_dir, "out")
+        # an out dir left EMPTY by a GC'd zero-row emission is not output
+        self.emitted_any = os.path.isdir(self.out_path) and any(
+            os.scandir(self.out_path)
+        )
+        self.out_schema = None
+        self.emit_n = _next_seq_index(self.out_path, "e")
+
+    def _adopt(self, chunk: str):
+        """Track a written chunk by its footer ts range; an empty one is
+        removed. Returns its max ts (None when empty)."""
+        mn, mx = _parquet_ts_minmax(chunk, self.ts_col)
+        if mx is None:
+            shutil.rmtree(chunk, ignore_errors=True)
+        else:
+            self.stats[chunk] = (mn, mx)
+        return mx
+
+    def exists(self) -> bool:
+        return bool(self.emitted_any or self.stats or self.watermark is not None)
+
+    def close_of(self, ts):
+        """When a row at `ts` closes: the end of its tumble window (Spark
+        window() alignment, origin 1970-01-01 UTC), or `ts` itself."""
+        import datetime
+
+        if self.window_sec is None:
+            return ts
         epoch = datetime.datetime(1970, 1, 1, tzinfo=ts.tzinfo)
         off = (ts - epoch).total_seconds()
         return epoch + datetime.timedelta(
-            seconds=((off // self._win_sec) + 1) * self._win_sec
+            seconds=((off // self.window_sec) + 1) * self.window_sec
         )
 
-    def apply_batch(self, batch: DataFrame) -> None:
+    def drop_late(self, batch: DataFrame) -> DataFrame:
+        """WatermarkFilter: rows at/behind the watermark have closed."""
+        if self.watermark is None:
+            return batch
+        return batch.filter(F.col(self.ts_col) > F.lit(self.watermark))
+
+    def closing(self, col: str, prev_wm, wm):
+        """Rows whose close point `col` is in the newly-closed span."""
+        cond = F.col(col) <= F.lit(wm)
+        if prev_wm is not None:
+            cond = cond & (F.col(col) > F.lit(prev_wm))
+        return cond
+
+    def advance(self, max_ts) -> None:
+        """Watermark = max event time seen − delay, never moving back."""
         import datetime
 
-        chunk = os.path.join(self.chunks_dir, f"b{self._n}")
-        self._n += 1
-        if self._in_schema is None:
-            self._in_schema = batch.schema  # driver-side analysis only
+        wm = max_ts - datetime.timedelta(seconds=self.delay_seconds)
+        if self.watermark is None or wm > self.watermark:
+            self.watermark = wm
+
+    def push(self, batch: DataFrame):
+        """Drop late rows, append the batch as one chunk (one O(batch)
+        write) and advance the watermark from its footer. Returns
+        (prev_wm, wm, chunks that can hold rows closing in (prev_wm, wm])
+        — no candidates when the watermark stalled — or None for an
+        empty batch (nothing changes)."""
+        prev_wm = self.watermark
+        batch = self.drop_late(batch)
+        chunk = os.path.join(self.chunks_dir, f"b{self.n}")
+        self.n += 1
+        if self.schema is None:
+            self.schema = batch.schema  # driver-side analysis only
         batch.coalesce(4).write.mode("overwrite").parquet(chunk)
-        mn, mx = _parquet_ts_minmax(chunk, self.ts_col)
-        if mx is None:  # empty batch: drop the empty chunk, nothing to do
-            shutil.rmtree(chunk, ignore_errors=True)
-            return
-        self._chunk_stats[chunk] = (mn, mx)
-        wm = mx - datetime.timedelta(seconds=self.delay_seconds)
-        if self._watermark is not None and wm < self._watermark:
-            wm = self._watermark
-        self._watermark = wm
-        prev_horizon = self._emit_horizon
+        mx = self._adopt(chunk)
+        if mx is None:
+            return None
+        self.advance(mx)
+        wm = self.watermark
+        if prev_wm is not None and wm <= prev_wm:
+            return prev_wm, wm, []
+        # footer-range pruning: a chunk whose FIRST row is still open, or
+        # whose LAST row closed before prev_wm, contributes nothing
+        cand = [
+            c
+            for c, (cmn, cmx) in self.stats.items()
+            if self.close_of(cmn) <= wm
+            and (prev_wm is None or self.close_of(cmx) > prev_wm)
+        ]
+        return prev_wm, wm, cand
 
-        # chunks that can hold rows of a newly-closed window (window end
-        # in (prev_horizon, wm]): footer-range pruning — a chunk whose
-        # LAST row's window already emitted, or whose FIRST row's window
-        # is still open, contributes nothing; a stalled watermark
-        # (wm <= horizon) closes nothing, so skip the emission job
-        cand = (
-            []
-            if prev_horizon is not None and wm <= prev_horizon
-            else [
-                c
-                for c, (cmn, cmx) in self._chunk_stats.items()
-                if self._window_end(cmn) <= wm
-                and (prev_horizon is None or self._window_end(cmx) > prev_horizon)
-            ]
-        )
-        if cand:
-            win = F.window(self.ts_col, self.window_duration)
-            rows = self.spark.read.schema(self._in_schema).parquet(*cand)
-            closing = F.col("__we") <= F.lit(wm)
-            if prev_horizon is not None:
-                closing = closing & (F.col("__we") > F.lit(prev_horizon))
-            emitted = (
-                rows.withColumn("__we", win.getField("end"))
-                .filter(closing)
-                .groupBy(win.getField("start").alias("ws"))
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            out_dir = os.path.join(self.out_path, f"e{self._emit_n}")
-            self._emit_n += 1
-            if self._out_schema is None:
-                self._out_schema = emitted.schema
-            emitted.coalesce(1).write.mode("overwrite").parquet(out_dir)
-            if _parquet_rows(out_dir) > 0:
-                self._emitted_any = True
-            else:
-                shutil.rmtree(out_dir, ignore_errors=True)
-        # every window ending at/before wm is now emitted (or had no rows)
-        self._emit_horizon = wm
-        # GC chunks whose every row's window has emitted — the buffer
-        # bound (delay × arrival rate), kept by file-level retention
-        # instead of a per-batch rewrite
-        for c, (_, cmx) in list(self._chunk_stats.items()):
-            if self._window_end(cmx) <= wm:
-                shutil.rmtree(c, ignore_errors=True)
-                del self._chunk_stats[c]
+    def read(self, chunks) -> DataFrame:
+        return self.spark.read.schema(self.schema).parquet(*chunks)
 
-    def feed(self, batch: DataFrame) -> None:
-        """Drop late rows (event time behind the watermark), then fold."""
-        if self._watermark is not None:
-            batch = batch.filter(F.col(self.ts_col) >= F.lit(self._watermark))
-        self.apply_batch(batch)
+    def emit(self, out: DataFrame) -> bool:
+        """Append one emission as its own `e{N}` dir (append-only output,
+        never rewritten); a zero-row one is removed. True if it had rows."""
+        out_dir = os.path.join(self.out_path, f"e{self.emit_n}")
+        self.emit_n += 1
+        if self.out_schema is None:
+            self.out_schema = out.schema
+        out.coalesce(2).write.mode("overwrite").parquet(out_dir)
+        if _parquet_rows(out_dir) > 0:
+            self.emitted_any = True
+            return True
+        shutil.rmtree(out_dir, ignore_errors=True)
+        return False
 
-    def result(self) -> DataFrame:
-        if not self._emitted_any:
-            # nothing emitted yet (or only empty batches so far): return an
-            # empty, correctly-typed frame instead of a path-not-found error
-            return self.spark.createDataFrame([], "ws timestamp, n bigint")
+    def emitted(self) -> DataFrame | None:
+        """Everything emitted so far (None before the first row). The
+        recursive lookup spans every emission dir (and the flat files of
+        older state); the known schema skips the inference job."""
+        if not self.emitted_any:
+            return None
         r = self.spark.read.option("recursiveFileLookup", "true")
-        if self._out_schema is not None:
-            r = r.schema(self._out_schema)
+        if self.out_schema is not None:
+            r = r.schema(self.out_schema)
         return r.parquet(self.out_path)
+
+    def write_wm(self) -> None:
+        tmp = self.wm_path + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(self.watermark.isoformat())
+        os.replace(tmp, self.wm_path)
+
+    def commit(self) -> None:
+        """Make the watermark durable, then GC fully-closed chunks. Runs
+        AFTER the emission write: the stored WM is the emit horizon on
+        restart, so a crash in between leaves the OLD horizon, the
+        un-emitted span's chunks survive (the GC gates on the new WM
+        only after it is durable) and the next push re-runs the emission
+        — at-least-once recovery, like the versioned buffer."""
+        self.write_wm()
+        wm = self.watermark
+        for c, (_, cmx) in list(self.stats.items()):
+            if self.close_of(cmx) <= wm:
+                shutil.rmtree(c, ignore_errors=True)
+                del self.stats[c]
+
+
+def eowc_inserts(batch: DataFrame) -> DataFrame:
+    """The rows of a changelog chunk fed to an emit-on-window-close
+    operator. EOWC output is append-only, so a delete/update raises (the
+    reference optimizer enforces an append-only upstream for EOWC
+    plans). An insert-only chunk (`with_ops(df, 1)`) folds the delete
+    branch to an empty LocalRelation at plan time — zero Spark jobs;
+    only genuinely mixed batches pay the probe."""
+    deletes = batch.where(f"`{OP_COL}` < 0")
+    if not _statically_empty(deletes) and deletes.limit(1).count() > 0:
+        raise ValueError(
+            "EMIT ON WINDOW CLOSE requires an append-only input: "
+            "DELETE/UPDATE on the base table cannot retract already-"
+            "emitted rows (reference EOWC constraint)"
+        )
+    return batch.where(f"`{OP_COL}` > 0").drop(OP_COL)
 
 
 class EowcAggMv:
-    """EMIT ON WINDOW CLOSE aggregate MV — the SQL-surface runtime behind
-    `CREATE MATERIALIZED VIEW ... FROM TUMBLE(t, ts, INTERVAL ...) GROUP
-    BY window_start ... EMIT ON WINDOW CLOSE` over a table declaring
+    """EMIT ON WINDOW CLOSE aggregate MV — the runtime behind `CREATE
+    MATERIALIZED VIEW ... FROM TUMBLE(t, ts, INTERVAL ...) GROUP BY
+    window_start ... EMIT ON WINDOW CLOSE` over a table declaring
     `WATERMARK FOR ts AS ts - INTERVAL ...` (reference: watermark binding
     `src/frontend/src/binder/relation/watermark.rs`, EOWC plan
     enforcement `src/frontend/src/optimizer/mod.rs:474-630`, runtime
     sort buffer `src/stream/src/executor/sort.rs:20`).
 
-    Semantics: rows buffer until the event-time watermark (max ts seen −
-    delay, monotonic, DURABLE) passes their tumble window's end; each
-    closed window's rows then run through `recompute` (the MV body over
-    the closed rows, with window_start/window_end attached) and the
-    result is APPENDED exactly once — closed rows leave the buffer, and
-    late rows at/behind the watermark are dropped at the door
-    (WatermarkFilter, `watermark_filter.rs:34-36`). Output is
-    append-only by construction; deletes on the base table are rejected
-    loudly (the reference requires an append-only input for EOWC).
-
-    State = open-window rows only (bounded by delay × arrival rate) plus
-    one durable watermark timestamp — the reference's sort-buffer state
-    shape. Per-batch work is O(batch + closed rows), never O(history).
-
-    Buffer layout (round-12, same design as EowcTumbleAgg): batches
-    append as immutable chunk files; watermark advancement and the
-    did-any-window-close decision come from the chunks' parquet footer
-    min/max ts statistics (driver-side, no Spark job — previously one
-    agg job over buffer∪batch per feed); emission reads only the chunks
-    whose ts range overlaps the newly-closed span (prev-wm, wm], and
-    fully-emitted chunks are GC'd instead of rewriting the surviving
-    buffer every feed. Restart recovery needs no extra metadata: the
-    durable WM file IS the emit horizon (everything at/before it was
-    emitted) and chunk stats rebuild from the footers.
+    Semantics: rows buffer (`EowcBuffer`) until the durable event-time
+    watermark passes their tumble window's end; each closed window's
+    rows then run through `recompute` (the MV body over the closed rows,
+    with window_start/window_end attached) and the result is APPENDED
+    exactly once. Late rows are dropped at the door; deletes on the base
+    table are rejected loudly (the reference requires an append-only
+    input for EOWC). Per-batch work is one O(batch) chunk write, plus one
+    pruned recompute only when windows actually close.
     """
 
     def __init__(
@@ -1879,38 +1868,17 @@ class EowcAggMv:
         empty_input,
     ):
         self.spark = spark
-        self.ts_col = ts_col
         self.window_duration = window_duration
-        self._win_sec = _parse_duration_seconds(window_duration)
-        self.delay_seconds = delay_seconds
         self.recompute = recompute
         self.empty_input = empty_input  # () -> empty typed input frame
-        self.chunks_dir = os.path.join(state_dir, "buffer")
-        self.out_path = os.path.join(state_dir, "out")
-        self._emitted_any = os.path.isdir(self.out_path) and any(
-            os.scandir(self.out_path)
+        self.buf = EowcBuffer(
+            spark,
+            state_dir,
+            os.path.join(state_dir, "buffer"),
+            ts_col,
+            delay_seconds,
+            window_sec=_parse_duration_seconds(window_duration),
         )
-        self._wm_path = os.path.join(state_dir, "WM")
-        self._watermark = self._read_wm()
-        # restart recovery: open-window chunks are whatever chunk files
-        # exist; their ts ranges come from the footers (no Spark job)
-        self._chunk_stats: dict[str, tuple] = {}
-        self._n = 0
-        if os.path.isdir(self.chunks_dir):
-            for d in sorted(os.listdir(self.chunks_dir)):
-                m = re.fullmatch(r"b(\d+)", d)
-                if not m:
-                    continue
-                p = os.path.join(self.chunks_dir, d)
-                mn, mx = _parquet_ts_minmax(p, ts_col)
-                if mx is None:
-                    shutil.rmtree(p, ignore_errors=True)
-                    continue
-                self._chunk_stats[p] = (mn, mx)
-                self._n = max(self._n, int(m.group(1)) + 1)
-        self._in_schema = None
-        self._out_schema = None
-        self._emit_n = _next_seq_index(self.out_path, "e")
         self.downstream: list = []  # EOWC MVs have no retraction changelog
         # EOWC output is append-only by construction, so its changelog is
         # insert-only chunks — one per emission (the reference's
@@ -1920,94 +1888,27 @@ class EowcAggMv:
         self.emit_changelog = False
 
     def exists(self) -> bool:
-        return bool(
-            self._emitted_any or self._chunk_stats or self._watermark is not None
-        )
-
-    def _read_wm(self):
-        import datetime
-
-        try:
-            with open(self._wm_path) as f:
-                return datetime.datetime.fromisoformat(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return None
-
-    def _write_wm(self) -> None:
-        tmp = self._wm_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(self._watermark.isoformat())
-        os.replace(tmp, self._wm_path)
+        return self.buf.exists()
 
     def _annotate(self, df: DataFrame) -> DataFrame:
-        win = F.window(self.ts_col, self.window_duration)
+        win = F.window(self.buf.ts_col, self.window_duration)
         return df.withColumn("window_start", win.getField("start")).withColumn(
             "window_end", win.getField("end")
         )
 
     def apply_batch(self, batch: DataFrame, batch_id: int | None = None, batch_ns: str | None = None) -> None:
-        deletes = batch.where(f"`{OP_COL}` < 0")
-        if not _statically_empty(deletes) and deletes.limit(1).count() > 0:
-            raise ValueError(
-                "EMIT ON WINDOW CLOSE requires an append-only input: "
-                "DELETE/UPDATE on the base table cannot retract an "
-                "already-emitted window (reference EOWC constraint)"
-            )
-        self.feed(batch.where(f"`{OP_COL}` > 0").drop(OP_COL))
-
-    def _window_end(self, ts):
-        """End of the tumble window containing `ts` (Spark window()
-        alignment: origin 1970-01-01 UTC)."""
-        import datetime
-
-        epoch = datetime.datetime(1970, 1, 1, tzinfo=ts.tzinfo)
-        off = (ts - epoch).total_seconds()
-        return epoch + datetime.timedelta(
-            seconds=((off // self._win_sec) + 1) * self._win_sec
-        )
+        self.feed(eowc_inserts(batch))
 
     def feed(self, batch: DataFrame) -> None:
-        import datetime
-
-        if self._watermark is not None:
-            # WatermarkFilter: late rows at/behind the watermark dropped
-            batch = batch.filter(F.col(self.ts_col) > F.lit(self._watermark))
-        chunk = os.path.join(self.chunks_dir, f"b{self._n}")
-        self._n += 1
-        if self._in_schema is None:
-            self._in_schema = batch.schema  # driver-side analysis only
-        batch.coalesce(4).write.mode("overwrite").parquet(chunk)
-        mn, mx = _parquet_ts_minmax(chunk, self.ts_col)
-        if mx is None:  # empty batch: drop the empty chunk, nothing to do
-            shutil.rmtree(chunk, ignore_errors=True)
+        step = self.buf.push(batch)
+        if step is None:
             return
-        self._chunk_stats[chunk] = (mn, mx)
-        prev_wm = self._watermark
-        wm = mx - datetime.timedelta(seconds=self.delay_seconds)
-        if prev_wm is not None and wm < prev_wm:
-            wm = prev_wm
-        self._watermark = wm
-
-        # chunks that can hold rows of a newly-closed window (end in
-        # (prev_wm, wm]): footer-range pruning, no Spark job; a stalled
-        # watermark (wm <= prev_wm) closes nothing — skip the emission
-        cand = (
-            []
-            if prev_wm is not None and wm <= prev_wm
-            else [
-                c
-                for c, (cmn, cmx) in self._chunk_stats.items()
-                if self._window_end(cmn) <= wm
-                and (prev_wm is None or self._window_end(cmx) > prev_wm)
-            ]
-        )
+        prev_wm, wm, cand = step
         if cand:
-            rows = self.spark.read.schema(self._in_schema).parquet(*cand)
-            annotated = self._annotate(rows)
-            closing = F.col("window_end") <= F.lit(wm)
-            if prev_wm is not None:
-                closing = closing & (F.col("window_end") > F.lit(prev_wm))
-            out = self.recompute(annotated.filter(closing))
+            closed = self._annotate(self.buf.read(cand)).filter(
+                self.buf.closing("window_end", prev_wm, wm)
+            )
+            out = self.recompute(closed)
             if self.emit_changelog:
                 # one insert-only chunk per emission; chunk index = count
                 # of existing chunks (idempotent overwrite on redelivery)
@@ -2018,36 +1919,15 @@ class EowcAggMv:
                 with_ops(out, 1).coalesce(2).write.mode("overwrite").parquet(
                     os.path.join(self.changelog_dir, f"c{k}")
                 )
-            out_dir = os.path.join(self.out_path, f"e{self._emit_n}")
-            self._emit_n += 1
-            if self._out_schema is None:
-                self._out_schema = out.schema
-            out.coalesce(2).write.mode("overwrite").parquet(out_dir)
-            if _parquet_rows(out_dir) > 0:
-                self._emitted_any = True
-            else:
-                shutil.rmtree(out_dir, ignore_errors=True)
-        # WM durability AFTER the emission write: the stored WM doubles
-        # as the emit horizon on restart, so a crash between the two must
-        # leave the OLD horizon in place — the un-emitted span's chunks
-        # survive (GC below also gates on it) and the next feed re-runs
-        # the emission, exactly the old buffer's at-least-once recovery.
-        self._write_wm()
-        # GC chunks whose every row's window has emitted (file-level
-        # retention instead of the previous per-feed buffer rewrite)
-        for c, (_, cmx) in list(self._chunk_stats.items()):
-            if self._window_end(cmx) <= wm:
-                shutil.rmtree(c, ignore_errors=True)
-                del self._chunk_stats[c]
+            self.buf.emit(out)
+        self.buf.commit()
 
     def result(self) -> DataFrame:
-        if not self._emitted_any:
+        out = self.buf.emitted()
+        if out is None:
             # typed empty frame: the MV body over zero input rows
             return self.recompute(self._annotate(self.empty_input())).limit(0)
-        r = self.spark.read.option("recursiveFileLookup", "true")
-        if self._out_schema is not None:
-            r = r.schema(self._out_schema)
-        return r.parquet(self.out_path)
+        return out
 
 
 def stream_to_mv(

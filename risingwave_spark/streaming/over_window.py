@@ -36,22 +36,18 @@ seed because the suffix always runs to the partition end.
 from __future__ import annotations
 
 import os
-import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from risingwave_spark.streaming.mv import (
     ChunkedState,
-    OP_COL,
+    EowcBuffer,
     _BucketedMvTable,
-    _next_seq_index,
-    _parquet_rows,
-    _parquet_ts_minmax,
-    _statically_empty,
     buckets_from_chunks,
+    eowc_inserts,
     nullsafe_cond,
+    split_changelog,
 )
 
 _KINDS = {
@@ -310,7 +306,7 @@ class MaterializedOverWindowDelta:
             return None
 
     def _log_changelog(self, old_rows: DataFrame, new_rows: DataFrame) -> None:
-        from risingwave_spark.streaming.mv import OP_COL, with_ops
+        from risingwave_spark.streaming.mv import with_ops
 
         def strip(df: DataFrame) -> DataFrame:
             return df.drop(*[c for c in df.columns if c.startswith("__aux_")])
@@ -542,10 +538,7 @@ class MaterializedOverWindowDelta:
         are idempotent full recomputes from committed state, closing the
         crash window between state commit and MV flip. `batch_ns` scopes
         the pointer per upstream stream (see ChunkedState.fold)."""
-        # parsed-SQL one-call forms (r13 §B: Column chains pay a py4j
-        # round trip per node; where(str)+drop(str) is 2 per side)
-        inserts = batch.where(f"`{OP_COL}` > 0").drop(OP_COL)
-        deletes = batch.where(f"`{OP_COL}` < 0").drop(OP_COL)
+        inserts, deletes = split_changelog(batch)
         # tombstones carry keys AND order cols so the boundary
         # computation below can come from the chunk files
         did_fold = self.state.fold(
@@ -881,7 +874,6 @@ class EowcOverWindow:
         self.row_id = row_id
         self.funcs = funcs
         self.payload_cols = payload_cols
-        self.delay_seconds = delay_seconds
         # lead-emission filtering is by ROW IDENTITY: the row id always
         # rides through _window_outputs (appended to payload when absent)
         # and is stripped from result() if the caller didn't ask for it
@@ -899,58 +891,19 @@ class EowcOverWindow:
         self.buffer = _VersionedTable(spark, os.path.join(state_dir, "buffer"))
         self.seeds = _VersionedTable(spark, os.path.join(state_dir, "seeds"))
         self.tail = _VersionedTable(spark, os.path.join(state_dir, "tail"))
-        self.out_path = os.path.join(state_dir, "out")
-        # guard against an out dir left EMPTY by a GC'd zero-row emission
-        self._emitted_any = os.path.isdir(self.out_path) and any(
-            os.scandir(self.out_path)
+        # the shared EOWC chunk buffer + durable watermark (a row closes
+        # at its own ts). Chunks are used only when no function looks
+        # FORWARD (no lead, no FOLLOWING frame end — _reaches emit reach
+        # 0): then every feed's emitted set is exactly the event-time
+        # span (prev wm, new wm]. Forward reach holds back the last
+        # `reach` CLOSED rows per partition, which breaks that file-level
+        # invariant, so those instances (and pre-existing legacy buffer
+        # state) keep the versioned buffer and reuse only the watermark.
+        self.buf = EowcBuffer(
+            spark, state_dir, os.path.join(state_dir, "buffer_chunks"),
+            ts_col, delay_seconds,
         )
-        # Round-12 chunk buffer (same design as EowcTumbleAgg/EowcAggMv,
-        # guide §1.2/§2.4): when no function looks FORWARD (no lead, no
-        # FOLLOWING frame end — _reaches emit reach 0), the emitted set of
-        # every feed is exactly the event-time span (prev wm, new wm], so
-        # batches can append as immutable chunk files: the watermark comes
-        # from the chunk's parquet footer max-ts (driver-side, no Spark
-        # job — previously one agg job over buffer∪batch per feed),
-        # emission reads only the chunks overlapping the newly-closed
-        # span, and fully-emitted chunks are GC'd instead of rewriting the
-        # whole surviving buffer every feed. Forward reach holds back the
-        # last `reach` CLOSED rows per partition — that breaks the
-        # "emitted iff ts <= wm" file-level invariant, so those instances
-        # (and pre-existing legacy buffer state) keep the versioned-buffer
-        # path.
-        self._chunks_dir = os.path.join(state_dir, "buffer_chunks")
         self._use_chunks = _reaches(funcs)[0] == 0 and not self.buffer.exists()
-        self._chunk_stats: dict[str, tuple] = {}  # path -> (min_ts, max_ts)
-        self._chunk_n = 0
-        if self._use_chunks and os.path.isdir(self._chunks_dir):
-            # restart: adopt surviving chunks (ts ranges from footers),
-            # resume numbering; the durable WM below is the emit horizon
-            for d in sorted(os.listdir(self._chunks_dir)):
-                m = re.fullmatch(r"b(\d+)", d)
-                if not m:
-                    continue
-                p = os.path.join(self._chunks_dir, d)
-                mn, mx = _parquet_ts_minmax(p, ts_col)
-                self._chunk_n = max(self._chunk_n, int(m.group(1)) + 1)
-                if mx is None:
-                    shutil.rmtree(p, ignore_errors=True)
-                    continue
-                self._chunk_stats[p] = (mn, mx)
-        self._in_schema = None
-        self._emit_n = _next_seq_index(self.out_path, "e")
-        # durable watermark (reference: the sort buffer's watermark rides
-        # the barrier/state table): restart must keep the late-drop
-        # boundary, or a post-restart late row would emit out of order
-        self._wm_path = os.path.join(state_dir, "WM")
-        self._watermark = None
-        try:
-            with open(self._wm_path) as f:
-                import datetime as _dt
-
-                self._watermark = _dt.datetime.fromisoformat(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            pass
-        self._out_schema = None
         #: optional schema source for result() before first emission
         self.empty_input = None
 
@@ -1010,51 +963,17 @@ class EowcOverWindow:
         return self._feed_buffered(batch)
 
     def _feed_chunks(self, batch: DataFrame) -> None:
-        """Chunk-buffer feed (emit reach 0): one O(batch) chunk write per
-        feed; emission (only when the watermark advances) reads the
-        chunks overlapping the newly-closed span (prev wm, wm] — the
-        emitted set IS that event-time span, late rows having been
-        dropped at the door and rows <= prev wm having emitted already."""
-        import datetime
-
-        prev_wm = self._watermark
-        if prev_wm is not None:
-            # WatermarkFilter: late rows at/behind the watermark dropped
-            # (strictly `>` — a ts==wm row has already been emitted)
-            batch = batch.filter(F.col(self.ts_col) > F.lit(prev_wm))
-        chunk = os.path.join(self._chunks_dir, f"b{self._chunk_n}")
-        self._chunk_n += 1
-        if self._in_schema is None:
-            self._in_schema = batch.schema  # driver-side analysis only
-        batch.coalesce(4).write.mode("overwrite").parquet(chunk)
-        mn, mx = _parquet_ts_minmax(chunk, self.ts_col)
-        if mx is None:  # empty batch: drop the chunk, nothing to do
-            shutil.rmtree(chunk, ignore_errors=True)
+        """Chunk-buffer feed (emit reach 0): the emitted set IS the
+        newly-closed span (prev wm, wm], late rows having been dropped
+        at the door and rows <= prev wm having emitted already."""
+        step = self.buf.push(batch)
+        if step is None:
             return
-        self._chunk_stats[chunk] = (mn, mx)
-        wm = mx - datetime.timedelta(seconds=self.delay_seconds)
-        if prev_wm is not None and wm < prev_wm:
-            wm = prev_wm
-        self._watermark = wm
-
-        # chunks that can hold rows of the newly-closed span (prev_wm,
-        # wm]: footer-range pruning, no Spark job; a stalled watermark
-        # closes nothing — skip the emission entirely
-        cand = (
-            []
-            if prev_wm is not None and wm <= prev_wm
-            else [
-                c
-                for c, (cmn, cmx) in self._chunk_stats.items()
-                if cmn <= wm and (prev_wm is None or cmx > prev_wm)
-            ]
-        )
+        prev_wm, wm, cand = step
         if cand:
-            rows = self.spark.read.schema(self._in_schema).parquet(*cand)
-            closing = F.col(self.ts_col) <= F.lit(wm)
-            if prev_wm is not None:
-                closing = closing & (F.col(self.ts_col) > F.lit(prev_wm))
-            closed = rows.filter(closing)
+            closed = self.buf.read(cand).filter(
+                self.buf.closing(self.ts_col, prev_wm, wm)
+            )
             seeds = self.seeds.read() if self.seeds.exists() else None
             delta = self._delta()
             out = delta._window_outputs(closed, seeds)
@@ -1063,9 +982,7 @@ class EowcOverWindow:
                 # (all live chunk rows past the emit horizon — already-
                 # emitted stragglers in partially-emitted chunks are
                 # exactly the rows the tail retains)
-                buf = self.spark.read.schema(self._in_schema).parquet(
-                    *self._chunk_stats.keys()
-                )
+                buf = self.buf.read(self.buf.stats)
                 if prev_wm is not None:
                     buf = buf.filter(F.col(self.ts_col) > F.lit(prev_wm))
                 out = self._frame_outputs(out, buf)
@@ -1073,58 +990,33 @@ class EowcOverWindow:
                 self._update_tail(out, buf)
             else:
                 out = out.localCheckpoint(eager=True)
-            out_dir = os.path.join(self.out_path, f"e{self._emit_n}")
-            self._emit_n += 1
-            if self._out_schema is None:
-                self._out_schema = out.schema
-            out.coalesce(2).write.mode("overwrite").parquet(out_dir)
-            if _parquet_rows(out_dir) > 0:
-                self._emitted_any = True
+            if self.buf.emit(out):
                 # carry-out: last emitted row's outputs per partition
                 # seed the next emission (merged over previous seeds)
-                new_seeds = delta._seeds(out)
-                if seeds is not None:
-                    stale = seeds.join(
-                        new_seeds.select(*self.keys), on=self.keys, how="left_anti"
-                    )
-                    new_seeds = stale.unionByName(new_seeds)
-                self.seeds.write(new_seeds)
-            else:
-                shutil.rmtree(out_dir, ignore_errors=True)
-        # WM durability AFTER the emission write: the stored WM is the
-        # emit horizon on restart — a crash in between leaves the old
-        # horizon, the un-emitted span's chunks survive (GC below gates
-        # on wm too) and the next feed re-runs the emission (the same
-        # at-least-once recovery the buffered path has).
-        tmp = self._wm_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(self._watermark.isoformat())
-        os.replace(tmp, self._wm_path)
-        # GC chunks whose every row has emitted (file-level retention —
-        # the delay × arrival-rate buffer bound, without the rewrite)
-        for c, (_, cmx) in list(self._chunk_stats.items()):
-            if cmx <= wm:
-                shutil.rmtree(c, ignore_errors=True)
-                del self._chunk_stats[c]
+                self._write_seeds(delta, out, seeds)
+        self.buf.commit()
+
+    def _write_seeds(self, delta, out: DataFrame, seeds: DataFrame | None) -> None:
+        new_seeds = delta._seeds(out)
+        if seeds is not None:
+            stale = seeds.join(
+                new_seeds.select(*self.keys), on=self.keys, how="left_anti"
+            )
+            new_seeds = stale.unionByName(new_seeds)
+        self.seeds.write(new_seeds)
 
     def _feed_buffered(self, batch: DataFrame) -> None:
-        import datetime
-
-        if self._watermark is not None:
-            # late rows at/behind the watermark are dropped (WatermarkFilter;
-            # strictly `>` — everything <= wm has already been emitted, and
-            # re-emitting a ts==wm row would break the seed continuation)
-            batch = batch.filter(F.col(self.ts_col) > F.lit(self._watermark))
-        buf = batch
+        # late rows at/behind the watermark are dropped (strictly `>` —
+        # everything <= wm has already been emitted, and re-emitting a
+        # ts==wm row would break the seed continuation)
+        buf = batch = self.buf.drop_late(batch)
         if self.buffer.exists():
             buf = self.buffer.read().unionByName(batch)
         mx = buf.agg(F.max(self.ts_col)).first()[0]
         if mx is None:
             return
-        wm = mx - datetime.timedelta(seconds=self.delay_seconds)
-        if self._watermark is not None and wm < self._watermark:
-            wm = self._watermark
-        self._watermark = wm
+        self.buf.advance(mx)
+        wm = self.buf.watermark
 
         closed = buf.filter(F.col(self.ts_col) <= F.lit(wm))
         still_open = buf.filter(F.col(self.ts_col) > F.lit(wm))
@@ -1164,69 +1056,34 @@ class EowcOverWindow:
         out = out.localCheckpoint(eager=True)
         if self._frame_funcs:
             self._update_tail(out, buf)
-        if self._out_schema is None:
-            self._out_schema = out.schema
-        out.coalesce(2).write.mode("append").parquet(self.out_path)
-        self._emitted_any = True
-        # carry-out: last emitted row's outputs per partition become the
-        # next emission's seeds (merged over previous seeds)
-        new_seeds = delta._seeds(out)
-        if seeds is not None:
-            stale = seeds.join(
-                new_seeds.select(*self.keys), on=self.keys, how="left_anti"
-            )
-            new_seeds = stale.unionByName(new_seeds)
-        self.seeds.write(new_seeds)
+        # flat appends (this path's legacy layout; an empty emission
+        # still writes the schema, so result() stays readable)
+        if self.buf.out_schema is None:
+            self.buf.out_schema = out.schema
+        out.coalesce(2).write.mode("append").parquet(self.buf.out_path)
+        self.buf.emitted_any = True
+        self._write_seeds(delta, out, seeds)
         self.buffer.write(still_open)
-        tmp = self._wm_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(self._watermark.isoformat())
-        os.replace(tmp, self._wm_path)
+        self.buf.write_wm()
 
     def apply_batch(
         self, batch: DataFrame, batch_id: int | None = None, batch_ns=None
     ) -> None:
-        """Changelog-handle adapter (MV front-door contract): EOWC output
-        is append-only, so delete ops are rejected loudly (the reference
-        optimizer enforces append-only upstream for EOWC plans)."""
-        from risingwave_spark.streaming.mv import OP_COL
-
-        deletes = batch.where(f"`{OP_COL}` < 0")
-        # an insert-only chunk (with_ops(df, 1)) folds the delete branch
-        # to an empty LocalRelation at plan time — zero Spark jobs for
-        # the common case; only genuinely mixed batches pay the probe
-        if not _statically_empty(deletes) and deletes.limit(1).count():
-            raise ValueError(
-                "EMIT ON WINDOW CLOSE over-window requires an append-only "
-                "source: deletes/updates cannot retract emitted rows"
-            )
-        self.feed(batch.where(f"`{OP_COL}` > 0").drop(OP_COL))
+        """Changelog-handle adapter (MV front-door contract)."""
+        self.feed(eowc_inserts(batch))
 
     def exists(self) -> bool:
-        return (
-            self._emitted_any
-            or self.buffer.exists()
-            or bool(self._chunk_stats)
-            or self._watermark is not None
-        )
+        return self.buf.exists() or self.buffer.exists()
 
     def result(self) -> DataFrame:
-        if not self._emitted_any:
-            if self.empty_input is not None:
-                # pre-emission: correct schema, zero rows
-                out = self._delta()._window_outputs(self.empty_input(), None)
-            else:
+        out = self.buf.emitted()
+        if out is None:
+            if self.empty_input is None:
                 raise ValueError("nothing emitted yet")
-        else:
-            # recursive lookup spans both output layouts (legacy flat
-            # appends and the chunk path's e{N} emission dirs); the
-            # known schema skips the inference job
-            r = self.spark.read.option("recursiveFileLookup", "true")
-            if self._out_schema is not None:
-                r = r.schema(self._out_schema)
-            out = r.parquet(self.out_path)
-        if self._frame_funcs and not self._emitted_any:
-            out = self._frame_outputs(out, self.empty_input())
+            # pre-emission: correct schema, zero rows
+            out = self._delta()._window_outputs(self.empty_input(), None)
+            if self._frame_funcs:
+                out = self._frame_outputs(out, self.empty_input())
         drop = [c for c in out.columns if c.startswith("__aux_")]
         if self._extra_row_id:
             drop.append(self.row_id)

@@ -4,8 +4,10 @@ schema arity, order-insensitive values)."""
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
+import time
 
 import duckdb
 import pytest
@@ -122,6 +124,35 @@ def pytest_collection_modifyitems(config, items):
             qname = item.name.split("[", 1)[-1].rstrip("]")
             if qname in slow_q:
                 item.add_marker(skip_q)
+
+
+_job_groups = itertools.count()
+
+
+def spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs `fn()` launches, through the public API: the
+    call runs under its own job group and the status tracker lists that
+    group's jobs. The tracker is fed asynchronously by the listener bus,
+    so a one-task sentinel job runs afterwards; once it shows as
+    finished, every earlier job event has been processed."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(group + "-sentinel", "sentinel")
+        sc.parallelize([0], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while time.monotonic() < deadline:
+        ids = st.getJobIdsForGroup(group + "-sentinel")
+        info = st.getJobInfo(ids[0]) if ids else None
+        if info is not None and info.status == "SUCCEEDED":
+            break
+        time.sleep(0.01)
+    return len(st.getJobIdsForGroup(group))
 
 
 def assert_matches_oracle(spark_df, ddb_con, oracle_sql: str, name: str = "?"):

@@ -2596,6 +2596,12 @@ def test_explain_mv_stream_pipeline(eng):
         "sum(v) OVER (PARTITION BY k ORDER BY v SESSION WITH GAP 5) AS ss FROM ept"
     )
     assert "MaterializedOverWindowDelta" in p and "whole-partition" in p
+    p = plan(
+        "CREATE MATERIALIZED VIEW e5 AS SELECT window_start AS ws, count(*) AS n "
+        "FROM TUMBLE(ept, ts, INTERVAL '1 hour') GROUP BY window_start "
+        "EMIT ON WINDOW CLOSE"
+    )
+    assert "EowcAggMv" in p and "WatermarkFilter" in p
     # EXPLAIN executed nothing
     assert "e1" not in eng.mv_handles and _rows(eng.sql("SHOW MATERIALIZED VIEWS")) == []
 

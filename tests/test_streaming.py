@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from risingwave_spark.queries.util import tables
 from risingwave_spark.streaming.mv import MaterializedGroupAgg, run_changelog, with_ops
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, spark_jobs
 
 
 @pytest.fixture()
@@ -700,7 +700,7 @@ def test_eowc_lead_duplicate_order_values_emit_once(spark):
             [(6, 1, ts(40), 15)], "rid int, k int, ts timestamp, v int"
         )
         eowc.feed(b2)
-        rids = [r.rid for r in spark.read.parquet(eowc.out_path).collect()]
+        rids = [r.rid for r in spark.read.parquet(eowc.buf.out_path).collect()]
         assert len(rids) == len(set(rids)), f"duplicate emissions: {sorted(rids)}"
 
 
@@ -982,13 +982,15 @@ def test_eowc_over_window_bounded_rows_frames(spark):
 
 
 def test_eowc_chunk_buffer_restart_and_gc(spark, tmp_path):
-    """Round-12 EOWC chunk buffer: the append-only buffer GCs fully
-    emitted chunks (file-level retention), a RESTART over the same state
-    dir adopts the surviving chunks and resumes chunk numbering (no
-    overwrite of live buffer files), and emissions never duplicate."""
+    """EOWC chunk buffer (EowcAggMv over EowcBuffer): the append-only
+    buffer GCs fully emitted chunks (file-level retention), a RESTART
+    over the same state dir adopts the surviving chunks, the durable
+    watermark and the chunk numbering (no overwrite of live buffer
+    files), and emissions never duplicate — not even when
+    already-emitted rows are replayed late after the restart."""
     import datetime
 
-    from risingwave_spark.streaming.mv import EowcTumbleAgg
+    from risingwave_spark.streaming.mv import EowcAggMv
 
     sd = str(tmp_path / "eowc_state")
     t0 = datetime.datetime(2024, 1, 1, 0, 10)
@@ -999,23 +1001,38 @@ def test_eowc_chunk_buffer_restart_and_gc(spark, tmp_path):
             "id long, ts timestamp",
         )
 
-    e1 = EowcTumbleAgg(spark, sd, "ts", "1 hour", delay_seconds=600)
-    e1.feed(batch(0, 20, 70))          # wm 01:20-10m=01:10 -> hour 0 closes
-    assert {(r.ws.hour, r.n) for r in e1.result().collect()} == {(0, 2)}
-    # hour-0 rows emitted; the chunk still holds an open hour-1 row -> kept
-    assert len(e1._chunk_stats) == 1
-    n_before = e1._n
+    def open_mv():
+        return EowcAggMv(
+            spark, sd, "ts", "1 hour", 600,
+            recompute=lambda rows: rows.groupBy(F.col("window_start").alias("ws"))
+            .agg(F.count(F.lit(1)).alias("n")),
+            empty_input=lambda: batch().limit(0),
+        )
 
-    # restart over the same dir: surviving chunk adopted, numbering resumes
-    e2 = EowcTumbleAgg(spark, sd, "ts", "1 hour", delay_seconds=600)
-    assert len(e2._chunk_stats) == 1 and e2._n == n_before
-    e2._watermark = e1._watermark        # class keeps wm in memory only
-    e2._emit_horizon = e1._emit_horizon
+    def got(mv):
+        return sorted((r.ws.hour, r.n) for r in mv.result().collect())
+
+    e1 = open_mv()
+    e1.feed(batch(0, 20, 70))          # wm 01:20-10m=01:10 -> hour 0 closes
+    assert got(e1) == [(0, 2)]
+    # hour-0 rows emitted; the chunk still holds an open hour-1 row -> kept
+    assert len(e1.buf.stats) == 1
+    n_before = e1.buf.n
+
+    # restart over the same dir: surviving chunk adopted, numbering and
+    # the watermark resume from disk
+    e2 = open_mv()
+    assert len(e2.buf.stats) == 1 and e2.buf.n == n_before
+    assert e2.buf.watermark == e1.buf.watermark
     e2.feed(batch(130, 190))             # wm 03:10-10m=03:00 -> hours 1+2 close
-    got = sorted((r.ws.hour, r.n) for r in e2.result().collect())
-    assert got == [(0, 2), (1, 1), (2, 1)]
+    assert got(e2) == [(0, 2), (1, 1), (2, 1)]
     # everything emitted except the open hour-3 row's chunk
-    assert len(e2._chunk_stats) == 1
+    assert len(e2.buf.stats) == 1
+    # late replay of already-emitted rows (ts <= wm): dropped at the
+    # door, the output is unchanged and no chunk is kept for them
+    e2.feed(batch(0, 20, 70, 130))
+    assert got(e2) == [(0, 2), (1, 1), (2, 1)]
+    assert len(e2.buf.stats) == 1
 
 
 def test_eowc_agg_mv_emission_index_skips_gaps(spark, tmp_path):
@@ -1039,7 +1056,38 @@ def test_eowc_agg_mv_emission_index_skips_gaps(spark, tmp_path):
         recompute=lambda rows: rows,
         empty_input=lambda: spark.createDataFrame([], "ts timestamp"),
     )
-    assert mv._emit_n == 3
+    assert mv.buf.emit_n == 3
+
+
+def test_eowc_agg_mv_warm_feed_job_count(spark, tmp_path):
+    """Spark jobs of a warm EowcAggMv.feed: a feed that closes no window
+    writes its chunk and nothing else (the watermark and the close
+    decision come from the chunk footers); a feed that closes one adds
+    only the pruned recompute + emission write."""
+    import datetime
+
+    from risingwave_spark.streaming.mv import EowcAggMv
+
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def batch(*minutes):
+        return spark.createDataFrame(
+            [(i, t0 + datetime.timedelta(minutes=m)) for i, m in enumerate(minutes)],
+            "id long, ts timestamp",
+        )
+
+    mv = EowcAggMv(
+        spark, str(tmp_path / "eowc"), "ts", "1 hour", 600,
+        recompute=lambda rows: rows.groupBy("window_start")
+        .agg(F.count(F.lit(1)).alias("n")),
+        empty_input=lambda: batch().limit(0),
+    )
+    mv.feed(batch(5, 20))
+    mv.feed(batch(75))  # wm 01:05: hour 0 closes (cold emission)
+    assert spark_jobs(spark, lambda: mv.feed(batch(90))) == 1  # wm 01:20
+    assert spark_jobs(spark, lambda: mv.feed(batch(135))) == 3  # hour 1 closes
+    got = sorted((r.window_start.hour, r.n) for r in mv.result().collect())
+    assert got == [(0, 2), (1, 2)]
 
 
 def test_mv_empty_batch_still_compacts_on_cadence(spark, events, tmp_path):
@@ -1089,7 +1137,7 @@ def test_eowc_over_window_chunk_buffer_gc_and_restart(spark, tmp_path):
     assert ew._use_chunks  # backward-looking funcs take the chunk path
     ew.feed(batch((0, 1, 10, 0), (1, 1, 11, 20), (2, 1, 12, 40)))
     # wm = 40-10 = 30min: rids 0,1 emitted; chunk still holds rid 2 → kept
-    assert len(ew._chunk_stats) == 1 and not ew.buffer.exists()
+    assert len(ew.buf.stats) == 1 and not ew.buffer.exists()
     got1 = _rows(ew.result().select("rid", "rn", "prev"))
     assert got1 == [(0, 1, None), (1, 2, 10)]
 
@@ -1099,8 +1147,8 @@ def test_eowc_over_window_chunk_buffer_gc_and_restart(spark, tmp_path):
         {"rn": ("row_number",), "prev": ("lag", "v")}, ["v", "rid"],
         delay_seconds=600,
     )
-    assert ew2._use_chunks and len(ew2._chunk_stats) == 1
-    assert ew2._watermark == ew._watermark and ew2._chunk_n == ew._chunk_n
+    assert ew2._use_chunks and len(ew2.buf.stats) == 1
+    assert ew2.buf.watermark == ew.buf.watermark and ew2.buf.n == ew.buf.n
     # late replay of rid 0/1 (ts <= wm) must drop at the door; rid 2
     # closes once the watermark passes it; seeds continue rn at 3
     ew2.feed(batch((0, 1, 10, 0), (1, 1, 11, 20), (3, 1, 13, 70)))
@@ -1108,7 +1156,7 @@ def test_eowc_over_window_chunk_buffer_gc_and_restart(spark, tmp_path):
     assert got2 == [(0, 1, None), (1, 2, 10), (2, 3, 11)]
     # the first chunk (rids 0-2) is now fully emitted → GC'd; only the
     # open rid-3 chunk survives
-    assert len(ew2._chunk_stats) == 1
+    assert len(ew2.buf.stats) == 1
 
     # forward-looking reach (lead) keeps the versioned-buffer path
     ew3 = EowcOverWindow(
@@ -1156,23 +1204,23 @@ def test_literal_keyset_fallback_join_path(spark, tmp_path, monkeypatch):
         [(i, i % 5, float(i)) for i in range(200)], "event_id int, k int, value double"
     )
     mv = MaterializedGroupAgg(spark, str(tmp_path / "mv"), ["k"], "event_id", "value")
-    next_job = lambda: spark.sparkContext._jsc.sc().dagScheduler().nextJobId()  # noqa: E731
     jobs = []
     for i in range(4):
         mv.apply_batch(with_ops(df.filter(F.col("event_id") % 4 == i), 1))
         assert mv._chunk_affected_values(mv.state.last_fold) is None
-        j0 = next_job()
-        mv.apply_batch(with_ops(df.filter(F.col("event_id") % 4 == i).limit(0), 1))
-        jobs.append(next_job() - j0)
+        empty = with_ops(df.filter(F.col("event_id") % 4 == i).limit(0), 1)
+        jobs.append(spark_jobs(spark, lambda: mv.apply_batch(empty)))
     # the join path per warm fold: chunk write + (empty batch detected
     # from footers, splice skipped) — an EMPTY fold must stay O(1) jobs
     # even on the fallback path (no take(1)/re-eval jobs)
     assert all(j <= 2 for j in jobs[1:]), jobs
     # non-empty folds on the join path: bounded small job count (chunk
     # write + broadcast build + splice shuffle/write + listing probes)
-    j0 = next_job()
-    mv.apply_batch(with_ops(df.filter(F.col("event_id") % 4 == 0), 1))
-    assert next_job() - j0 <= 6, next_job() - j0
+    n = spark_jobs(
+        spark,
+        lambda: mv.apply_batch(with_ops(df.filter(F.col("event_id") % 4 == 0), 1)),
+    )
+    assert n <= 6, n
     v = F.col("value")
     # slice 0 was folded twice (insert chunks don't dedup row ids), so
     # the expected aggregate is over the doubled slice-0 input
